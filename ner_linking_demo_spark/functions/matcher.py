@@ -25,12 +25,19 @@ Matching rule (deterministic, shared by engine and oracle):
 
 The matcher state is a small dict built once from the gazetteer dimension
 table and broadcast; matching runs inside Arrow-batched pandas UDFs at
-per-document granularity.
+per-document granularity. Per document, the tokenizer's regex fast path
+(``tokenization.split_words``) yields the words and, from the cumulative
+part lengths, their offsets; the words are casefolded one by one (never
+the text, since casefold is not length-preserving), the positions whose
+word starts some term are found once for all labels, and only those are
+scanned — the output is that of the word-by-word scan described above.
 """
 
 from __future__ import annotations
 
-from .tokenization import _ascii_fast_eligible, words_with_offsets
+from itertools import accumulate, compress, count
+
+from .tokenization import split_words, words_with_offsets
 
 Mention = tuple[str, int, int, str]  # (label, start, end, span)
 
@@ -46,8 +53,8 @@ class DictionaryMatcher:
     def __init__(self, terms_by_label: dict[str, list[str]]):
         self.tries: dict[str, dict[tuple[str, ...], bool]] = {}
         self.max_len: dict[str, int] = {}
-        # first-token gate: scanning positions whose word can't start any
-        # term skip with one set lookup (the overwhelmingly common case)
+        # first-token gate: only positions whose word starts some term
+        # are scanned at all (the overwhelmingly common case is none)
         self.first_tokens: dict[str, set[str]] = {}
         for label, terms in terms_by_label.items():
             keys = {term_key(t) for t in terms}
@@ -55,44 +62,43 @@ class DictionaryMatcher:
             self.tries[label] = dict.fromkeys(keys, True)
             self.max_len[label] = max((len(k) for k in keys), default=0)
             self.first_tokens[label] = {k[0] for k in keys}
+        self.labels = sorted(self.tries)
+        self.any_first = set().union(*self.first_tokens.values())
 
     def find_mentions(self, text: str) -> list[Mention]:
-        words = words_with_offsets(text)
-        if _ascii_fast_eligible(text):
-            # ASCII: casefold == lower and lower() is length-preserving,
-            # so one C-level lower of the whole text + offset slicing
-            # replaces a per-word casefold call (round-6; identical
-            # lowered tokens by construction). A compiled-alternation
-            # regex scan was also tried here and measured SLOWER than
-            # this first-token-gated loop (python re tries every
-            # alternative per position) — see OPTIMIZATION_r06.md.
-            lt = text.lower()
-            lowered = [lt[s:e] for _, s, e in words]
-        else:
+        parts = split_words(text)
+        if parts is None:
+            words = words_with_offsets(text)
             lowered = [w.casefold() for w, _, _ in words]
+        else:
+            lowered = list(map(str.casefold, parts[1::2]))
+        # candidate first-token positions, found once for every label
+        cands = list(
+            compress(count(), map(self.any_first.__contains__, lowered))
+        )
+        if not cands:
+            return []
+        if parts is None:
+            _, starts, ends = zip(*words)
+        else:
+            bounds = list(accumulate(map(len, parts), initial=0))
+            starts, ends = bounds[1::2], bounds[2::2]
+        n_words = len(lowered)
         out: list[Mention] = []
-        for label in sorted(self.tries):
+        for label in self.labels:
             table = self.tries[label]
             max_n = self.max_len[label]
             firsts = self.first_tokens[label]
-            i = 0
-            n_words = len(words)
-            while i < n_words:
-                if lowered[i] not in firsts:
-                    i += 1
+            nxt = 0  # matches are non-overlapping within a label
+            for i in cands:
+                if i < nxt or lowered[i] not in firsts:
                     continue
-                matched = 0
                 for n in range(min(max_n, n_words - i), 0, -1):
                     if tuple(lowered[i : i + n]) in table:
-                        matched = n
+                        start, end = starts[i], ends[i + n - 1]
+                        out.append((label, start, end, text[start:end]))
+                        nxt = i + n
                         break
-                if matched:
-                    start = words[i][1]
-                    end = words[i + matched - 1][2]
-                    out.append((label, start, end, text[start:end]))
-                    i += matched
-                else:
-                    i += 1
         # Reference output ordering: sort by (start, end, label)
         # (`mentions_detection.py:283-285`); uniqueness on the triple is
         # asserted there (:286) and is structural here (non-overlap per label).

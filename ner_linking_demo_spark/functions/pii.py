@@ -118,11 +118,15 @@ def scrub_pii(
             t.contains("@") | t.contains("+") | t.rlike(r"[0-9]\.[0-9]")
         )
         hit = cheap & hit
-    tmp = docs.withColumn("_pii_hit", hit)
-    hit = F.col("_pii_hit")
+    # the helper column must not clobber a caller's column of that name
+    hit_name = "_pii_hit"
+    while hit_name in docs.columns:
+        hit_name = "_" + hit_name
+    tmp = docs.withColumn(hit_name, hit)
+    hit = F.col(hit_name)
     cols = {text_col: F.when(hit, redact_pii(t, pats)).otherwise(t)}
     if keep_counts:
         zero = F.lit(0).cast("int")
         for kind, c in pii_counts(t, pats).items():
             cols[f"n_{kind}"] = F.when(hit, c).otherwise(zero)
-    return tmp.withColumns(cols).drop("_pii_hit")
+    return tmp.withColumns(cols).drop(hit_name)

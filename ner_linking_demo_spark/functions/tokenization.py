@@ -23,6 +23,12 @@ only *inside* Arrow-batched pandas UDFs at per-document granularity — the
 same granularity at which the reference runs it — never per-row from the
 driver.
 
+Two implementations, one semantic: a text with no DROP-class and no
+astral character (any script, any punctuation: nearly all web text) is
+tokenized by one C-level ``re.split`` over character classes derived from
+``_classify``; any other text takes the per-character loop
+``_words_loop``, which the fast path is property-tested against.
+
 Invariant (mirrors the reference's internal assert at
 ``pre_process.py:92-93``): the total number of word characters equals the
 number of non-dropped, non-space characters consumed.
@@ -30,7 +36,9 @@ number of non-dropped, non-space characters consumed.
 
 from __future__ import annotations
 
+import re
 import unicodedata
+from itertools import accumulate, groupby
 
 _ASCII_PUNCT = frozenset(
     [c for c in range(33, 48)]
@@ -70,11 +78,10 @@ def is_control(ch: str) -> bool:
     return unicodedata.category(ch).startswith("C")
 
 
-# Hot-path classification cache: WORD / PUNCT / SPACE / DROP, precomputed
-# for the Latin-1 range (the overwhelmingly common case in the NER UDF's
-# per-character loop) and memoized for everything else. Pure lookup of the
-# same predicates above — semantics identical (hypothesis-fuzzed against
-# the reference implementation).
+# Character classes: WORD / PUNCT / SPACE / DROP. ``_BMP_CLASS`` holds the
+# class of every Basic Multilingual Plane code point, computed once from
+# the predicates above (~0.1 s at import); astral code points are
+# classified on demand and memoized in ``_ASTRAL_CACHE``.
 _WORD, _PUNCT, _SPACE, _DROP = 0, 1, 2, 3
 
 
@@ -88,27 +95,49 @@ def _classify(ch: str) -> int:
     return _WORD
 
 
-_LATIN1_CLASS = [_classify(chr(cp)) for cp in range(256)]
-_CLASS_CACHE: dict[str, int] = {}
-
-# ASCII fast path (round-6): for ASCII text with no DROP-class bytes
-# (NUL / control chars other than \t\n\r never appear in curated
-# corpora),
-# the per-character classification collapses to "alnum runs are words,
-# every other non-space printable is a one-char punct token" — exactly
-# one C-level regex scan instead of a per-character python loop.
-# Bit-identical to the slow path on eligible text (property-fuzzed in
-# tests/test_tokenization_hypothesis.py, which generates both ASCII and
-# non-ASCII inputs); anything non-ASCII or carrying control bytes takes
-# the original loop.
-import re as _re
-
-_ASCII_TOKEN_RE = _re.compile(r"[0-9A-Za-z]+|[^\s0-9A-Za-z]")
-_ASCII_UNSAFE_RE = _re.compile(r"[\x00-\x08\x0b\x0c\x0e-\x1f\x7f]")
+_BMP_CLASS = bytes(_classify(chr(cp)) for cp in range(0x10000))
+_ASTRAL_CACHE: dict[str, int] = {}
 
 
-def _ascii_fast_eligible(text: str) -> bool:
-    return text.isascii() and _ASCII_UNSAFE_RE.search(text) is None
+def _char_class(cls: int) -> str:
+    """Regex character-class body (no brackets) matching exactly the BMP
+    code points of class ``cls``."""
+    ranges, lo = [], 0
+    for c, run in groupby(_BMP_CLASS):
+        hi = lo + sum(1 for _ in run) - 1
+        if c == cls:
+            ranges.append(f"\\u{lo:04x}-\\u{hi:04x}")
+        lo = hi + 1
+    return "".join(ranges)
+
+
+# Fast path: in a text with no DROP-class and no astral character every
+# character is WORD, PUNCT or SPACE, so tokenization is "runs of WORD
+# characters, and every PUNCT character on its own" — one C-level
+# ``re.split`` instead of the per-character loop. The capturing split
+# returns ``[sep0, word0, sep1, word1, ..., sepN]``, and the words'
+# offsets are the cumulative lengths of those parts. Any other text takes
+# ``_words_loop``, which is also the reference the fast path is tested
+# against (tests/test_tokenization_hypothesis.py).
+_PUNCT_CLASS = _char_class(_PUNCT)
+_SPACE_CLASS = _char_class(_SPACE)
+_NEEDS_LOOP_RE = re.compile(
+    f"[{_char_class(_DROP)}\\U00010000-\\U0010ffff]"
+)
+_WORD_SPLIT_RE = re.compile(
+    f"([^{_PUNCT_CLASS}{_SPACE_CLASS}]+|[{_PUNCT_CLASS}])"
+)
+
+
+def split_words(text: str) -> list[str] | None:
+    """``[sep0, word0, sep1, word1, ..., sepN]`` for a text the fast path
+    covers (words at the odd indexes, the separators between them — runs
+    of SPACE characters, possibly empty — at the even ones), or ``None``
+    when ``text`` holds a DROP-class or astral character and must go
+    through the per-character loop."""
+    if _NEEDS_LOOP_RE.search(text) is not None:
+        return None
+    return _WORD_SPLIT_RE.split(text)
 
 
 def uncase(text: str) -> str:
@@ -129,22 +158,23 @@ def words_with_offsets(
 
     ``start``/``end`` are code-point offsets (end exclusive) relative to
     ``start_i``. Semantics match the reference ``word_start_end`` exactly
-    (verified by property tests in tests/test_tokenization.py).
+    (verified by tests/test_tokenization.py and the property tests in
+    tests/test_tokenization_hypothesis.py). Texts without DROP-class or
+    astral characters take the regex fast path (:func:`split_words`); the
+    rest take the per-character loop.
     """
     if not cased:
         text = uncase(text)
+    parts = split_words(text)
+    if parts is None:
+        return _words_loop(text, start_i)
+    bounds = list(accumulate(map(len, parts), initial=start_i))
+    return list(zip(parts[1::2], bounds[1::2], bounds[2::2]))
 
-    if _ascii_fast_eligible(text):
-        if start_i == 0:
-            return [
-                (m.group(), m.start(), m.end())
-                for m in _ASCII_TOKEN_RE.finditer(text)
-            ]
-        return [
-            (m.group(), m.start() + start_i, m.end() + start_i)
-            for m in _ASCII_TOKEN_RE.finditer(text)
-        ]
 
+def _words_loop(text: str, start_i: int) -> list[tuple[str, int, int]]:
+    """Per-character tokenizer: the semantics of :func:`words_with_offsets`
+    for any text, DROP-class and astral characters included."""
     out: list[tuple[str, int, int]] = []
     buf: list[str] = []
     buf_start = -1
@@ -159,17 +189,16 @@ def words_with_offsets(
             buf_start = -1
             buf_last = -1
 
-    latin1 = _LATIN1_CLASS
-    cache = _CLASS_CACHE
+    bmp = _BMP_CLASS
+    astral = _ASTRAL_CACHE
     for ch in text:
         cp = ord(ch)
-        if cp < 256:
-            cls = latin1[cp]
+        if cp < 0x10000:
+            cls = bmp[cp]
         else:
-            cls = cache.get(ch)
+            cls = astral.get(ch)
             if cls is None:
-                cls = _classify(ch)
-                cache[ch] = cls
+                cls = astral[ch] = _classify(ch)
         if cls == _WORD:
             if not buf:
                 buf_start = pos

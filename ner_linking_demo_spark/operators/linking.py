@@ -215,7 +215,7 @@ def link_mentions_fused(
     shuffles disappear (SURVEY.md §3.3 noted M5 can emit per-mention
     arrays directly; this is that plan, used when stage checkpointing is
     off). Chained after the NER UDF it keeps the whole pages->linked path
-    in ONE Spark stage: scan -> repartitionByRange -> [NER | link] UDFs.
+    in ONE Spark stage: scan -> rebalance -> [NER | link] UDFs.
 
     Result-identical to knn_candidates + k_distinct_codes + groupBy
     (tested in tests/test_pipeline_golden.py)."""
@@ -360,8 +360,8 @@ def detect_and_link(
     from .ner import balance_pages
 
     projected = pages.select(url_col, text_col)
-    # shared policy with detect_mentions (giant-page balancing comes from
-    # the small partition payload target; =0 trusts the storage layout)
+    # shared policy with detect_mentions (AQE sizes the UDF stage and
+    # splits giant-page skew; =0 trusts the storage layout)
     balanced = balance_pages(projected, url_col, num_partitions)
     return balanced.mapInPandas(run, schema=LINKED_SCHEMA)
 

@@ -2,7 +2,7 @@
 
 Spark-first re-expression of the reference NER batch
 (`/root/reference/server/ner/scripts/mentions_detection.py:130-293`):
-logical plan is Scan -> (optional repartition) -> PythonMapInArrow ->
+logical plan is Scan -> (optional rebalance) -> PythonMapInArrow ->
 mentions. There is no shuffle at word/subtoken grain — tokenization, model
 scoring and span decode all happen inside one Arrow-batched UDF at
 per-document granularity, exactly the granularity at which the reference
@@ -11,10 +11,10 @@ batches its model (SURVEY.md §3.2).
 Scale posture:
 - model/matcher state is built once from the broadcast gazetteer per
   python worker (iterator-of-batches pattern), never per row/batch;
-- ``repartition(n, xxhash64(url))`` evens out giant pages before the UDF
-  (north_rule skew handling); n defaults to the session shuffle
-  parallelism — at 100 TB the caller sizes it so one partition's text fits
-  executor memory;
+- a url-hash ``rebalance`` evens out giant pages before the UDF
+  (north_rule skew handling) and lets AQE size the UDF stage from the
+  shuffled bytes (:func:`balance_pages`); an explicit ``num_partitions``
+  pins the count;
 - output carries only mention rows (UDTF-shaped: one page row -> n mention
   rows), so the giant ``text``/``html`` columns are pruned immediately
   after the UDF; column pruning pushes the scan down to (url, text).
@@ -52,18 +52,23 @@ def balance_pages(
 ) -> DataFrame:
     """Shared pre-UDF balancing policy for the page-scale operators.
 
-    Hash-partition on url: deterministic given (url, n), uniform for
-    high-cardinality url keys, and single-pass (range partitioning would
-    add a sampling scan). ``num_partitions=0`` SKIPS the shuffle entirely
-    — use when the input table's storage layout is already
-    url-hash-partitioned (e.g. a bucketed/partitioned Iceberg scan): at
-    100 TB this avoids re-shuffling the whole corpus."""
+    By default a ``rebalance`` on url: the exchange hash-partitions on
+    url (deterministic, uniform for high-cardinality url keys, single
+    pass — range partitioning would add a sampling scan), and AQE sizes
+    the UDF stage from the map-output bytes — it coalesces small
+    partitions and splits skewed ones — instead of running one Python
+    task per ``spark.sql.shuffle.partitions`` slot whatever the input
+    size (each Python task has a fixed start-up cost; SCALE.md).
+    ``num_partitions=n`` forces exactly ``n`` url-hash partitions.
+    ``num_partitions=0`` SKIPS the shuffle entirely — use when the input
+    table's storage layout is already url-hash-partitioned (e.g. a
+    bucketed/partitioned Iceberg scan): at 100 TB this avoids
+    re-shuffling the whole corpus."""
     if num_partitions == 0:
         return projected
-    n = num_partitions or int(
-        projected.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-    )
-    return projected.repartition(n, F.col(url_col))
+    if num_partitions is None:
+        return projected.hint("rebalance", url_col)
+    return projected.repartition(num_partitions, F.col(url_col))
 
 
 class TokenClassifierMentionProvider:
@@ -214,7 +219,6 @@ def detect_mentions(
     projected = pages.select(
         F.col(url_col).alias(url_col), F.col(text_col).alias(text_col)
     )
-    # the checkpointed path's lineage counters are keyed by this stable
-    # partitioning (balance_pages docstring for the policy)
+    # balance_pages docstring for the policy
     balanced = balance_pages(projected, url_col, num_partitions)
     return balanced.mapInPandas(run, schema=MENTIONS_SCHEMA)

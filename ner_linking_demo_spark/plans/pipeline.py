@@ -13,6 +13,7 @@ the whole service path becomes one spark-submit driver program.
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
 import pandas as pd
@@ -138,8 +139,6 @@ def run_pipeline(
     entities_df, code2entity = build_entities_local(spark, gazetteer_pdf)
     ent_pool = f_ent = f_c2e = None
     if cat:
-        from concurrent.futures import ThreadPoolExecutor
-
         ent_pool = ThreadPoolExecutor(max_workers=2)
         f_ent = ent_pool.submit(
             cat.stage, "entities", _sig(gaz_sig), lambda: entities_df
@@ -148,84 +147,98 @@ def run_pipeline(
             cat.stage, "code2entity", _sig(gaz_sig), lambda: code2entity
         )
 
-    if cat and checkpoint_granularity == "coarse":
-        # single fused python pass, single snapshot: the resumable mode
-        # for throughput-bound runs (lineage is linked-grain, not
-        # candidate-grain)
-        linked = cat.stage(
-            "linked",
-            _sig(input_sig, gaz_sig, k, reranker, emb_sig, "coarse"),
-            lambda: detect_and_link(
+    try:
+        if cat and checkpoint_granularity == "coarse":
+            # single fused python pass, single snapshot: the resumable mode
+            # for throughput-bound runs (lineage is linked-grain, not
+            # candidate-grain)
+            linked = cat.stage(
+                "linked",
+                _sig(input_sig, gaz_sig, k, reranker, emb_sig, "coarse"),
+                lambda: detect_and_link(
+                    pages,
+                    gazetteer_pdf,
+                    indexes,
+                    k=k,
+                    embedder=embedder,
+                    num_partitions=num_partitions,
+                ),
+            )
+            mentions = linked.select("url", "label", "start", "end", "span")
+        elif cat:
+            # checkpointed runs keep separate, resumable stages with the
+            # exploded-candidate linking plan (skew-visible, candidate-grain
+            # lineage)
+            mentions = cat.stage(
+                "mentions",
+                _sig(input_sig, gaz_sig),
+                lambda: detect_mentions(
+                    pages, gazetteer_pdf, num_partitions=num_partitions
+                ),
+            )
+            linked = cat.stage(
+                "linked",
+                _sig(input_sig, gaz_sig, k, reranker, emb_sig),
+                lambda: link_mentions(
+                    mentions, indexes, k=k, embedder=embedder, reranker=reranker
+                ),
+            )
+        elif reranker is None:
+            # throughput plan: pages -> linked in ONE python UDF stage;
+            # counters ride the plan as CollectMetrics observations (the
+            # north-rule metrics requirement without a lineage-taxing job)
+            from pyspark.sql import Observation
+
+            observations = {
+                "pages_in": Observation(),
+                "linked_out": Observation(),
+            }
+            pages = pages.observe(
+                observations["pages_in"], F.count(F.lit(1)).alias("n")
+            )
+            linked = detect_and_link(
                 pages,
                 gazetteer_pdf,
                 indexes,
                 k=k,
                 embedder=embedder,
                 num_partitions=num_partitions,
-            ),
-        )
-        mentions = linked.select("url", "label", "start", "end", "span")
-    elif cat:
-        # checkpointed runs keep separate, resumable stages with the
-        # exploded-candidate linking plan (skew-visible, candidate-grain
-        # lineage)
-        mentions = cat.stage(
-            "mentions",
-            _sig(input_sig, gaz_sig),
-            lambda: detect_mentions(
+            ).observe(observations["linked_out"], F.count(F.lit(1)).alias("n"))
+            mentions = linked.select("url", "label", "start", "end", "span")
+        else:
+            mentions = detect_mentions(
                 pages, gazetteer_pdf, num_partitions=num_partitions
-            ),
-        )
-        linked = cat.stage(
-            "linked",
-            _sig(input_sig, gaz_sig, k, reranker, emb_sig),
-            lambda: link_mentions(
+            )
+            linked = link_mentions(
                 mentions, indexes, k=k, embedder=embedder, reranker=reranker
-            ),
-        )
-    elif reranker is None:
-        # throughput plan: pages -> linked in ONE python UDF stage;
-        # counters ride the plan as CollectMetrics observations (the
-        # north-rule metrics requirement without a lineage-taxing job)
-        from pyspark.sql import Observation
-
-        observations = {
-            "pages_in": Observation(),
-            "linked_out": Observation(),
-        }
-        pages = pages.observe(
-            observations["pages_in"], F.count(F.lit(1)).alias("n")
-        )
-        linked = detect_and_link(
-            pages,
-            gazetteer_pdf,
-            indexes,
-            k=k,
-            embedder=embedder,
-            num_partitions=num_partitions,
-        ).observe(observations["linked_out"], F.count(F.lit(1)).alias("n"))
-        mentions = linked.select("url", "label", "start", "end", "span")
-    else:
-        mentions = detect_mentions(
-            pages, gazetteer_pdf, num_partitions=num_partitions
-        )
-        linked = link_mentions(
-            mentions, indexes, k=k, embedder=embedder, reranker=reranker
-        )
+            )
+        if cat:
+            # resolve the entities/code2entity snapshots submitted
+            # before the mentions stage (overlapped with the
+            # python-heavy stages)
+            entities_df = f_ent.result()
+            code2entity = f_c2e.result()
+    except BaseException as err:
+        # a failing stage must not leave the snapshot writers running
+        # behind the caller's back, nor lose their own errors
+        if ent_pool is not None:
+            ent_pool.shutdown(cancel_futures=True)
+            for fut in (f_ent, f_c2e):
+                if not fut.cancelled() and fut.exception() not in (None, err):
+                    err.add_note(
+                        f"concurrent snapshot write failed too: "
+                        f"{fut.exception()!r}"
+                    )
+        raise
+    if ent_pool is not None:
+        ent_pool.shutdown()
 
     if cat:
-        # Resolve the entities/code2entity snapshots submitted before
-        # the mentions stage (overlapped with the python-heavy
-        # stages), then run the triples/edges pair concurrently: both
-        # derive from the already-published linked snapshot and share
-        # no data dependency, so one pair member's write back-fills
-        # executors left idle by the other's commit tail (guide §2.6).
-        # A kill mid-pair leaves at most two recomputable stages.
-        from concurrent.futures import ThreadPoolExecutor
-
-        entities_df = f_ent.result()
-        code2entity = f_c2e.result()
-        ent_pool.shutdown()
+        # Run the triples/edges pair concurrently: both derive from the
+        # already-published linked snapshot and share no data
+        # dependency, so one pair member's write back-fills executors
+        # left idle by the other's commit tail (guide §2.6). A kill
+        # mid-pair leaves at most two recomputable stages.
         triples, edges = build_triples(linked, code2entity)
         der_sig = _sig(input_sig, gaz_sig, k, reranker, emb_sig)
         # reranker is part of the signature: triples/edges derive from

@@ -15,10 +15,14 @@ TESTDATA_SF001 = os.environ.get("NLDS_TESTDATA", "/root/testdata/sf0.001")
 
 @pytest.fixture(scope="session")
 def spark():
-    from ner_linking_demo_spark.session import get_spark
+    from ner_linking_demo_spark.session import default_parallelism, get_spark
 
+    # one task slot per CPU the box grants (SPARK_GRAFT_CPUS): AQE sizes
+    # the page rebalance from the session's parallelism
     s = get_spark(
-        app_name="nlds-tests", master="local[8]", shuffle_partitions=8
+        app_name="nlds-tests",
+        master=f"local[{default_parallelism()}]",
+        shuffle_partitions=8,
     )
     yield s
     s.stop()

@@ -148,3 +148,14 @@ def test_custom_patterns_bypass_cheap_guard(spark):
     }
     assert out[0] == "the <WORD> word"
     assert out[1] == "nothing here"
+
+
+def test_user_column_named_like_the_helper_survives(spark):
+    """scrub_pii's internal hit-flag column must not overwrite (and then
+    drop) a caller's column that happens to share its name."""
+    docs = _df(spark).withColumn("_pii_hit", F.col("doc_id") * 10)
+    out = scrub_pii(docs, keep_counts=True).orderBy("doc_id").collect()
+    assert [r["_pii_hit"] for r in out] == [i * 10 for i in range(len(ROWS))]
+    plain = scrub_pii(_df(spark), keep_counts=True).orderBy("doc_id").collect()
+    assert [r["text"] for r in out] == [r["text"] for r in plain]
+    assert [r["n_email"] for r in out] == [r["n_email"] for r in plain]

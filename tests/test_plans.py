@@ -26,6 +26,10 @@ def test_throughput_plan_shape(spark, golden_pages, golden_gazetteer):
     res = run_pipeline(spark, pages, golden_gazetteer, k=3)
     p = _plan(res.linked)
     assert _nodes(p, "Exchange") == 1, p
+    # a url rebalance: AQE sizes the UDF stage from the shuffled bytes
+    assert re.search(
+        r"hashpartitioning\(url#\d+, \d+\), REBALANCE_PARTITIONS_BY_COL", p
+    ), p
     assert _nodes(p, "MapInPandas") + _nodes(p, "PythonMapInArrow") == 1, p
     pt = _plan(res.triples)
     assert "BroadcastHashJoin" in pt, pt
@@ -91,6 +95,10 @@ def test_no_shuffle_plan_when_layout_trusted(
     shuffled = detect_and_link(
         pages, golden_gazetteer, build_indexes(golden_gazetteer, k=3), k=3,
         embedder=HashEmbedder(), num_partitions=4,
+    )
+    # an explicit count is pinned, not left to AQE
+    assert re.search(
+        r"hashpartitioning\(url#\d+, 4\), REPARTITION_BY_NUM", _plan(shuffled)
     )
     a = linked.toPandas().sort_values(["url", "start", "label"]).reset_index(drop=True)
     b = shuffled.toPandas().sort_values(["url", "start", "label"]).reset_index(drop=True)

@@ -212,3 +212,88 @@ def test_coarse_checkpoint_granularity(spark, golden_pages, golden_gazetteer, tm
     resumed = {s["table"] for s in cat.lineage() if s.get("resumed")}
     assert {"linked", "triples", "edges"} <= resumed
     assert again.triples.count() == coarse.triples.count()
+
+
+def _pool_threads() -> set[int]:
+    import threading
+
+    return {
+        t.ident
+        for t in threading.enumerate()
+        if t.name.startswith("ThreadPoolExecutor")
+    }
+
+
+def _failing_mentions(pages, gazetteer_pdf, num_partitions=None):
+    """Stand-in for detect_mentions whose UDF raises mid-stage."""
+    from ner_linking_demo_spark.operators.ner import MENTIONS_SCHEMA
+
+    def boom(batches):
+        for _ in batches:
+            raise RuntimeError("injected NER failure")
+        yield from ()
+
+    return pages.select("url", "text").mapInPandas(boom, MENTIONS_SCHEMA)
+
+
+def test_failing_stage_joins_snapshot_writers(
+    spark, golden_pages, golden_gazetteer, tmp_path, monkeypatch
+):
+    """A mentions stage that raises: the error reaches the caller, the
+    entities/code2entity writer threads are joined (none left behind),
+    no mentions snapshot is published, and the rerun resumes the
+    dimension snapshots and completes."""
+    from ner_linking_demo_spark.plans import pipeline as P
+
+    pages = pages_to_spark(spark, golden_pages.head(6))
+    ckpt = str(tmp_path / "fail")
+    before = _pool_threads()
+    with monkeypatch.context() as m:
+        m.setattr(P, "detect_mentions", _failing_mentions)
+        try:
+            run_pipeline(spark, pages, golden_gazetteer, k=3, checkpoint_dir=ckpt)
+        except Exception as e:  # noqa: BLE001 - Py4J/Python error types vary
+            assert "injected NER failure" in str(e)
+        else:
+            raise AssertionError("the failing stage did not raise")
+    assert _pool_threads() <= before
+    cat = CheckpointCatalog(spark, ckpt)
+    assert cat._snapshots("mentions") == []
+    assert cat._snapshots("entities") and cat._snapshots("code2entity")
+
+    r = run_pipeline(spark, pages, golden_gazetteer, k=3, checkpoint_dir=ckpt)
+    assert r.triples.count() > 0
+    resumed = {s["table"] for s in cat.lineage() if s.get("resumed")}
+    assert {"entities", "code2entity"} <= resumed
+
+
+def test_failing_stage_keeps_snapshot_writer_errors(
+    spark, golden_pages, golden_gazetteer, tmp_path, monkeypatch
+):
+    """When a concurrent snapshot write fails too, its error is not
+    dropped: it rides the stage error as a note."""
+    from ner_linking_demo_spark.plans import pipeline as P
+
+    real_stage = CheckpointCatalog.stage
+
+    def stage(self, table, input_sig, compute):
+        if table == "entities":
+            raise OSError("injected entities write failure")
+        return real_stage(self, table, input_sig, compute)
+
+    pages = pages_to_spark(spark, golden_pages.head(6))
+    before = _pool_threads()
+    monkeypatch.setattr(P, "detect_mentions", _failing_mentions)
+    monkeypatch.setattr(CheckpointCatalog, "stage", stage)
+    try:
+        run_pipeline(
+            spark, pages, golden_gazetteer, k=3,
+            checkpoint_dir=str(tmp_path / "fail2"),
+        )
+    except Exception as e:  # noqa: BLE001
+        assert "injected NER failure" in str(e)
+        notes = "\n".join(getattr(e, "__notes__", []))
+        assert "injected entities write failure" in notes
+    else:
+        raise AssertionError("the failing stage did not raise")
+    assert _pool_threads() <= before

@@ -5,7 +5,8 @@ assert the properties the 100 TB posture depends on:
 - dimension joins are broadcast (BroadcastHashJoin), fact joins are not
   collect-based;
 - the KG throughput plan contains exactly one exchange before the fused
-  UDF (repartition) and no exchange after it besides the triples join;
+  UDF (a url rebalance AQE sizes) and no exchange after it besides the
+  triples join;
 - relational queries run inside WholeStageCodegen spans.
 
 Usage: python tools/explain_audit.py [sf_dir]   (prints PASS/FAIL lines)
@@ -94,6 +95,19 @@ def main() -> int:
     failures += not check(
         "kg linked single exchange", n_exchanges == 1, f"(exchanges={n_exchanges})"
     )
+    # the pre-UDF exchange must stay a url rebalance, whose partition
+    # count AQE sets from the map-output bytes (coalescing small
+    # partitions, splitting skewed ones); a REPARTITION_BY_NUM exchange
+    # would pin one Python task per shuffle partition again
+    origins = re.findall(
+        r"\(\d+\) Exchange\n[^\n]*\nArguments: [^\n]*?\), ([A-Z_]+)",
+        p,
+    )
+    failures += not check(
+        "kg linked exchange is an AQE-sized url rebalance",
+        origins == ["REBALANCE_PARTITIONS_BY_COL"],
+        f"(origins={origins})",
+    )
     failures += not check(
         "kg linked one python stage",
         nodes(p, "MapInPandas") + nodes(p, "PythonMapInArrow") == 1,
@@ -105,7 +119,7 @@ def main() -> int:
     n_ex = nodes(p, "Exchange") + nodes(p, "BroadcastExchange")
     failures += not check(
         "kg triples no extra shuffle",
-        n_ex <= 2,  # input repartition + broadcast exchange
+        n_ex <= 2,  # input rebalance + broadcast exchange
         f"(exchanges={n_ex})",
     )
 
